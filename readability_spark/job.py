@@ -10,7 +10,10 @@ Usage (packaged per SURVEY.md §3.4):
 
 Resumable: completed buckets recorded in the manifest are skipped on restart
 (left anti-join). Output partitioned by bucket with dynamic partition
-overwrite, so re-running a bucket replaces its files atomically.
+overwrite, so re-running a bucket replaces its files atomically. Everything
+after extraction scales with this run's pending buckets: the write exchange
+has one partition per pending bucket, and the manifest rows and the length
+histogram come from re-reading only the buckets this run wrote.
 """
 
 from __future__ import annotations
@@ -33,11 +36,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="repartition RAW pages on the url-hash bucket before extraction "
         "(full-corpus shuffle; escape hatch for compute-skewed inputs). "
         "Default extracts on scan splits and shuffles only extracted rows.",
-    )
-    p.add_argument(
-        "--no-salt",
-        action="store_true",
-        help=argparse.SUPPRESS,  # deprecated: post-extract alignment is now the default
     )
     p.add_argument("--no-html", action="store_true", help="drop content_html from output")
     p.add_argument("--limit", type=int, default=0)
@@ -83,6 +81,22 @@ def load_input(spark, spec: str):
     return spark.read.parquet(spec)
 
 
+def read_written(spark, output: str, buckets: list, schema):
+    """Read back only the given bucket partitions of the job's output.
+    ``schema`` is the written DataFrame's: giving it skips the parquet
+    footer job of schema inference."""
+    from pyspark.sql import functions as F
+
+    if output.startswith("iceberg:"):
+        from readability_spark.sources.iceberg import qualify
+
+        table = spark.read.format("iceberg").load(qualify(output[len("iceberg:") :]))
+        return table.filter(F.col("bucket").isin(buckets))
+    root = output.rstrip("/")
+    reader = spark.read.schema(schema).option("basePath", root)
+    return reader.parquet(*(f"{root}/bucket={b}" for b in buckets))
+
+
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
 
@@ -106,6 +120,7 @@ def main(argv=None) -> int:
 
     from readability_spark.plans.pipeline import (
         append_manifest,
+        done_buckets,
         length_histogram,
         observed_extract,
         pending_buckets,
@@ -144,6 +159,7 @@ def main(argv=None) -> int:
 
     pages = with_bucket(pages, args.buckets)
     manifest = read_manifest(spark, args.manifest) if args.manifest else None
+    n_pending = args.buckets - len(done_buckets(manifest, args.buckets))
     pages = pending_buckets(pages, manifest)
 
     options = {}
@@ -164,6 +180,7 @@ def main(argv=None) -> int:
         include_html=not args.no_html,
         n_buckets=args.buckets,
         salt=args.pre_salt,
+        n_pending=n_pending,
     )
     if args.output.startswith("iceberg:"):
         from readability_spark.sources.iceberg import write_result
@@ -184,26 +201,22 @@ def main(argv=None) -> int:
         (metrics.get("html_bytes") or 0) - (metrics.get("content_bytes") or 0)
     )
 
-    if metrics.get("docs"):
-        if args.output.startswith("iceberg:"):
-            from readability_spark.sources.iceberg import qualify
-
-            out_df = spark.read.format("iceberg").load(
-                qualify(args.output[len("iceberg:") :])
-            )
-        else:
-            out_df = spark.read.parquet(args.output)
+    # the manifest rows and the histogram cover only the buckets this run
+    # wrote: re-reading the whole output would re-count buckets finished by
+    # earlier runs (duplicate manifest rows, a histogram mixing runs) and
+    # cost in proportion to the crawl instead of to this run
+    written = sorted(metrics.pop("buckets_written"))
+    metrics["buckets_written"] = len(written)
+    metrics["length_histogram"] = []
+    if written:
+        out_df = read_written(spark, args.output, written, result.schema)
         if args.manifest:
             append_manifest(out_df, args.manifest)
+        # a few hundred rows: sort on the driver, not with a Spark orderBy
         metrics["length_histogram"] = [
-            {"len_bucket": r["len_bucket"], "n": r["n"]}
-            for r in length_histogram(out_df).collect()
+            {"len_bucket": b, "n": n}
+            for b, n in sorted(tuple(r) for r in length_histogram(out_df).collect())
         ]
-    else:
-        # fully-resumed run: every bucket already in the manifest, nothing
-        # extracted, and the empty output dir has no schema to re-read
-        metrics["docs"] = 0
-        metrics["length_histogram"] = []
 
     print(json.dumps(metrics, default=str))
     spark.stop()

@@ -106,9 +106,13 @@ def _extract_one(url: Optional[str], html, options: dict, include_html: bool) ->
     return row
 
 
-def make_extract_batches(options: Optional[dict] = None, include_html: bool = True):
+def make_extract_batches(
+    options: Optional[dict] = None, include_html: bool = True, html_bytes: bool = False
+):
     """Build the mapInPandas function (options captured in the closure,
-    broadcast implicitly with the serialized function)."""
+    broadcast implicitly with the serialized function). ``html_bytes`` adds
+    a trailing column with each page's input size (``observed_extract``'s
+    boilerplate metric)."""
     options = dict(options or {})
     if not include_html:
         # text-only output: skip building the content-HTML string inside
@@ -128,6 +132,8 @@ def make_extract_batches(options: Optional[dict] = None, include_html: bool = Tr
         tune_worker_gc()
 
         names = [f.name for f in ARTICLE_SCHEMA.fields]
+        if html_bytes:
+            names.append("html_bytes")
         for pdf in batches:
             # numpy iteration: pandas Series.__iter__ boxes per element
             urls = pdf["url"].to_numpy() if "url" in pdf.columns else [None] * len(pdf)
@@ -136,6 +142,9 @@ def make_extract_batches(options: Optional[dict] = None, include_html: bool = Tr
                 _extract_one(u, h, options, include_html)
                 for u, h in zip(urls, htmls)
             ]
+            if html_bytes:
+                for row, h in zip(rows, htmls):
+                    row["html_bytes"] = len(h) if h is not None else 0
             gc.collect()
             yield pd.DataFrame(rows, columns=names)
 

@@ -69,10 +69,28 @@ def release_persistent_rdds(spark: SparkSession) -> int:
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> Optional[DataFrame]:
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:
+    """The manifest, or None only when no run has written one yet.
+
+    Any other failure (unreadable or corrupt files) raises: reading it as
+    "no manifest" would silently reprocess every bucket.
+    """
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(manifest_path)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return None
+    return spark.read.parquet(manifest_path)
+
+
+def done_buckets(manifest: Optional[DataFrame], n_buckets: int) -> set:
+    """Buckets in ``range(n_buckets)`` the manifest records as done, collected
+    once on the driver (one row per bucket, so a few thousand ints at most).
+    Rows of a run with a different ``n_buckets`` are ignored."""
+    if manifest is None:
+        return set()
+    return {
+        r["bucket"] for r in manifest.select("bucket").collect() if 0 <= r["bucket"] < n_buckets
+    }
 
 
 def pending_buckets(
@@ -86,7 +104,9 @@ def pending_buckets(
 
 
 def append_manifest(result: DataFrame, manifest_path: str) -> None:
-    """Record completed buckets: (bucket, n_docs, n_ok, run_ts)."""
+    """Record completed buckets: (bucket, n_docs, n_ok, run_ts). ``result``
+    must hold only the buckets this run wrote, or earlier buckets gain
+    duplicate rows."""
     (
         result.groupBy("bucket")
         .agg(
@@ -105,10 +125,12 @@ def observed_extract(
     include_html: bool = True,
     n_buckets: int = DEFAULT_BUCKETS,
     salt: bool = False,
+    n_pending: Optional[int] = None,
 ):
     """extract() wrapped with bucket alignment and observe() metrics.
 
-    Either way the plan has exactly ONE exchange; what `salt` chooses is
+    Either way the plan has exactly ONE exchange, hash-partitioned on the
+    bucket so each bucket lands in exactly one task; what `salt` chooses is
     *which bytes ride it*:
 
     - ``salt=False`` (default): extraction runs directly on the scan splits
@@ -129,41 +151,34 @@ def observed_extract(
       the write needs no second shuffle.
 
     Granularity is set by n_buckets: use >= 8 x total cores so the task
-    tail amortizes (at 10^12 docs: ~64k buckets, SCALE.md).
+    tail amortizes (at 10^12 docs: ~64k buckets, SCALE.md). The exchange
+    has ``max(1, n_pending)`` partitions (default: all ``n_buckets``), so a
+    resumed run with k of n buckets done schedules n - k write tasks, not n.
 
     Returns (result_df, observation); observation.get is available after the
-    first action on result_df.
+    first action on result_df. Besides the totals it holds
+    ``buckets_written``, the set of buckets this run wrote (at most
+    ``n_buckets`` ints), which bounds the post-write re-read.
     """
-    from readability_spark.operators.extract import ARTICLE_SCHEMA, _extract_one
+    from readability_spark.operators.extract import ARTICLE_SCHEMA, make_extract_batches
     from pyspark.sql.types import LongType, StructField, StructType
 
+    parts = n_buckets if n_pending is None else max(1, n_pending)
     if salt:
-        pages = salted_repartition(pages, n_buckets)
+        pages = with_bucket(pages, n_buckets).repartition(parts, F.col("bucket"))
 
     # keep html size through the UDF boundary for the boilerplate metric
     schema = StructType(ARTICLE_SCHEMA.fields + [StructField("html_bytes", LongType(), True)])
-    opts = dict(options or {})
-    out_cols = [f.name for f in schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                row = _extract_one(u, h, opts, include_html)
-                row["html_bytes"] = len(h) if h is not None else 0
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    result = pages.select("url", "html").mapInPandas(batches, schema)
+    result = pages.select("url", "html").mapInPandas(
+        make_extract_batches(options, include_html, html_bytes=True), schema
+    )
     result = with_bucket(result, n_buckets)
     if not salt:
         # the bucket-partitioned write needs alignment, or every task
         # writes into every bucket dir — a tasks x buckets small-file commit
         # storm. Align on the extracted output (one shuffle, post-UDF, small
         # rows) — this IS the default plan's only exchange.
-        result = result.repartition(n_buckets, F.col("bucket"))
+        result = result.repartition(parts, F.col("bucket"))
 
     obs = Observation("extract_metrics")
     result = result.observe(
@@ -173,19 +188,21 @@ def observed_extract(
         F.sum("html_bytes").alias("html_bytes"),
         F.sum(F.coalesce(F.length("content_html"), F.lit(0))).alias("content_bytes"),
         F.sum(F.coalesce(F.col("length"), F.lit(0))).alias("text_chars"),
+        F.collect_set("bucket").alias("buckets_written"),
     )
     return result, obs
 
 
 def length_histogram(result: DataFrame, bucket_size: int = 500) -> DataFrame:
-    """Extracted-length histogram (SURVEY.md §2.10 aggregation demo)."""
+    """Extracted-length histogram (SURVEY.md §2.10 aggregation demo),
+    unordered: it has a few hundred rows, so callers sort after collect()
+    instead of paying a range-partitioned sort."""
     return (
         result.withColumn(
             "len_bucket", (F.coalesce(F.col("length"), F.lit(0)) / bucket_size).cast("long")
         )
         .groupBy("len_bucket")
         .agg(F.count("*").alias("n"))
-        .orderBy("len_bucket")
     )
 
 

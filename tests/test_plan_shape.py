@@ -3,6 +3,8 @@ properties of the plan, not prose — assert them so refactors can't silently
 reintroduce a shuffle or widen a scan (the plan shape is what survives the
 jump from sf0.1 to 100 TB)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,6 +50,34 @@ def test_extraction_plan_pre_salt_single_shuffle(spark):
     plan = plan_of(result)
     assert plan.count("Exchange") == 1, plan
     assert plan.index("MapInPandas") < plan.index("Exchange"), plan
+
+
+def test_resumed_plan_sizes_exchange_to_pending_buckets(spark):
+    """Resumed with k of n buckets done: still ONE shuffle exchange above
+    the extraction, now hash-partitioned on the bucket into n - k
+    partitions, so the write schedules one task per pending bucket instead
+    of n (the broadcast of the tiny manifest is not a shuffle)."""
+    from readability_spark.plans.pipeline import (
+        done_buckets,
+        observed_extract,
+        pending_buckets,
+        with_bucket,
+    )
+
+    n, k = 16, 5
+    pages = with_bucket(spark.read.parquet(f"{SF}/documents.parquet")
+                        .select(F.col("doc_id").cast("string").alias("url"),
+                                F.encode("text", "utf-8").alias("html")), n)
+    manifest = spark.range(k).select(F.col("id").alias("bucket"))
+    n_pending = n - len(done_buckets(manifest, n))
+    result, _ = observed_extract(
+        pending_buckets(pages, manifest), include_html=False, n_buckets=n, n_pending=n_pending
+    )
+    plan = plan_of(result)
+    shuffles = [l for l in plan.splitlines() if "Exchange" in l and "BroadcastExchange" not in l]
+    assert len(shuffles) == 1, plan
+    assert re.search(rf"Exchange hashpartitioning\(bucket#\d+L, {n - k}\)", shuffles[0]), plan
+    assert plan.index(shuffles[0]) < plan.index("MapInPandas"), plan
 
 
 def test_extraction_scan_prunes_columns(spark):

@@ -100,6 +100,34 @@ def test_resume_protocol(spark, fixture_pages, tmp_path):
     assert remaining.count() == pages.filter(F.col("bucket") >= 4).count()
 
 
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """Only a missing manifest means "no bucket done". An unreadable one
+    fails the run; reading it as "nothing done" would reprocess the whole
+    crawl."""
+    from readability_spark.plans.pipeline import append_manifest, done_buckets, read_manifest
+
+    missing = read_manifest(spark, str(tmp_path / "no-manifest-yet"))
+    assert missing is None and done_buckets(missing, 8) == set()
+
+    only_corrupt = tmp_path / "only_corrupt"
+    only_corrupt.mkdir()
+    (only_corrupt / "part-00000.parquet").write_bytes(b"PAR1 truncated by a crash")
+    with pytest.raises(Exception):
+        done_buckets(read_manifest(spark, str(only_corrupt)), 8)
+
+    path = str(tmp_path / "manifest")
+    done = spark.range(10).select(
+        F.col("id").alias("bucket"), F.lit(True).alias("ok")
+    )
+    append_manifest(done, path)
+    # buckets of a run with a different --buckets are not done in this one
+    assert done_buckets(read_manifest(spark, path), 8) == set(range(8))
+    with open(os.path.join(path, "part-99999-corrupt.parquet"), "wb") as fh:
+        fh.write(b"PAR1 not a parquet footer")
+    with pytest.raises(Exception):
+        done_buckets(read_manifest(spark, path), 8)
+
+
 def test_salted_repartition_balance(spark, fixture_pages):
     from readability_spark.plans.pipeline import salted_repartition
 
